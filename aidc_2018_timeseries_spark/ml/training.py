@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from aidc_2018_timeseries_spark.operators.labels import rul_label
 from aidc_2018_timeseries_spark.operators.windowing import with_row_index
+from aidc_2018_timeseries_spark.sources.tables import local_frame
 
 
 def rul_gd_training_curve(
@@ -92,8 +93,7 @@ def rul_gd_training_curve(
         a = a - lr * 2.0 * (a - ybar)
         b = b - lr * 2.0 * (b - suy / suu)
 
-    spark = df.sparkSession
-    out = spark.createDataFrame(rows, "step bigint, loss double, loss_trail double")
+    out = local_frame(df.sparkSession, rows, "step bigint, loss double, loss_trail double")
     return out.select(
         "step",
         F.round("loss", 6).alias("loss"),

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aidc_2018_timeseries_spark.operators.text import tokenize
+from aidc_2018_timeseries_spark.sources.tables import local_frame
 
 
 def word_vocab(docs: DataFrame, text_col: str) -> DataFrame:
@@ -119,9 +120,11 @@ def train_bpe_merges(
         left, right = top[0]["left"], top[0]["right"]
         merges.append((left, right))
         pat, repl = _merge_pattern(left, right)
+        # lazy: the next round's argmax job materialises the state, so a
+        # round costs one job, and the last round's state is never built
         state = state.select(
             F.regexp_replace("syms", pat, repl).alias("syms"), "freq"
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
     return merges
 
 
@@ -129,8 +132,8 @@ def train_bpe_merges_df(docs: DataFrame, text_col: str, n_merges: int = 10) -> D
     """Catalog-facing form: the learned merge list as (rank, left, right)
     rows (rank = merge order, 0-based)."""
     merges = train_bpe_merges(docs, text_col, n_merges)
-    spark = docs.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         [(i, l, r) for i, (l, r) in enumerate(merges)],
         "rank long, left string, right string",
     )
@@ -302,7 +305,7 @@ def train_bpe_merges_batched(
         for left, right in batch:
             pat, repl = _merge_pattern(left, right)
             col = F.regexp_replace(col, pat, repl)
-        state = state.select(col.alias("syms"), "freq").localCheckpoint(eager=True)
+        state = state.select(col.alias("syms"), "freq").localCheckpoint(eager=False)
     return merges
 
 

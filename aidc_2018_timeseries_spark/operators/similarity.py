@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from aidc_2018_timeseries_spark.functions.vectors import cosine_similarity, dot, l2_norm
 from aidc_2018_timeseries_spark.operators.partitioning import spread_for_compute
+from aidc_2018_timeseries_spark.sources.tables import local_frame
 
 
 def _spread(df: DataFrame, col: str) -> DataFrame:
@@ -530,8 +531,8 @@ def lsh_signatures(
         (t, [1 << b for b, _ in sorted(ps)], [p for _, p in sorted(ps)])
         for t, ps in sorted(per_table.items())
     ]
-    pl = spark.createDataFrame(
-        rows, "table_id int, shifts array<bigint>, planes array<array<double>>"
+    pl = local_frame(
+        spark, rows, "table_id int, shifts array<bigint>, planes array<array<double>>"
     )
 
     def _step(acc, j):
@@ -1774,7 +1775,8 @@ def ivfpq_topk(
     rows = vectors.orderBy(id_col).limit(kcode).collect()
     if len(rows) < kcode:
         raise ValueError(f"need at least {kcode} vectors to seed the codebook")
-    book = spark.createDataFrame(
+    book = local_frame(
+        spark,
         [
             (s, code, [float(r[vec_col][s * subdim + j]) for j in range(subdim)])
             for s in range(m)

@@ -98,6 +98,9 @@ def partitioned_events_with_dim(
     path = tempfile.mkdtemp(prefix="aidc_dpp_events_")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
     fact = spark.read.parquet(path)
+    # Not sources.tables.local_frame: that builds a LocalRelation, whose
+    # tier filter the optimizer folds into the literal rows, leaving no
+    # dimension-side filter for dynamic partition pruning to inject.
     dim = spark.createDataFrame(
         [
             ("view", "passive"),

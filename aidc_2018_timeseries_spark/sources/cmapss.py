@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aidc_2018_timeseries_spark.operators.filters import backfill
+from aidc_2018_timeseries_spark.sources.tables import local_frame
 
 N_SETTINGS = 3
 N_SENSORS = 21
@@ -71,4 +72,4 @@ def read_rul_file(spark: SparkSession, path: str) -> DataFrame:
     with open(path) as fh:
         values = [int(line.strip()) for line in fh if line.strip()]
     rows = [(i + 1, v) for i, v in enumerate(values)]
-    return spark.createDataFrame(rows, "trajectory_ordinal int, base_rul int")
+    return local_frame(spark, rows, "trajectory_ordinal int, base_rul int")

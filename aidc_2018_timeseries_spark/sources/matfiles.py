@@ -23,6 +23,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from aidc_2018_timeseries_spark.sources.tables import local_frame
+
 
 def read_mat_music(
     spark: SparkSession,
@@ -65,6 +67,6 @@ def read_mat_music(
                 )
             for t, keys in enumerate(arr):
                 rows.append((split, song_id, t, [float(k) for k in keys]))
-    return spark.createDataFrame(
-        rows, "split string, song_id bigint, t bigint, keys array<double>"
+    return local_frame(
+        spark, rows, "split string, song_id bigint, t bigint, keys array<double>"
     )

@@ -158,8 +158,11 @@ def _import_all_package_modules() -> None:
 def face_hash(entry) -> str:
     _import_all_package_modules()
     sources = sorted(_transitive_sources(entry.spark_fn))
+    # An oracle that reads a committed fixture embeds its absolute path;
+    # where the repo is checked out is not part of the face.
+    oracle = (entry.oracle or "").replace(str(HERE), "<checkout>")
     return hashlib.md5(
-        ((entry.oracle or "") + "\n" + "\n".join(sources)).encode()
+        (oracle + "\n" + "\n".join(sources)).encode()
     ).hexdigest()
 
 
